@@ -13,12 +13,8 @@ import org.apache.spark.sql.functions._
   * CURRENT frontier joins the edge list each round (rows discovered
   * last round), so per-round work is frontier × out-degree, not
   * nodes × edges; the running distance table (one row per reached
-  * node) is eagerly checkpointed per round to keep the plan
-  * constant-size. Lineage cuts follow the [[ConnectedComponents]]
-  * contract: `checkpointDir = None` → `localCheckpoint` (local[n] /
-  * restartable batch); `Some(dir)` → reliable `checkpoint` into that
-  * directory, the production default at 100 TB where a deep BFS
-  * outlives preempted executors.
+  * node) is eagerly cut per round on [[Fixpoint]]; `maxHops` is a
+  * semantic radius there, so hitting it prints no cap line.
   */
 object Bfs {
 
@@ -46,57 +42,49 @@ object Bfs {
     * @return columns `node`, `hop` (min hops from any source, ≤ maxHops) */
   def hops(edges: DataFrame, sources: DataFrame, maxHops: Int,
       checkpointDir: Option[String] = None,
-      requireExhausted: Boolean = false): DataFrame = {
-    // core-tied round layout (see [[RoundLayout]]): node-sized
-    // per-round state must not inherit a corpus-derived session
-    // partition count -- measured at sf10 in GROWTH_r10
-    RoundLayout.coreTied(edges.sparkSession) {
-      // rotated per-round cuts: a superseded distance table's blocks are
-      // unpersisted once 2 newer cuts exist (see [[LineageCut]]) — bounded
-      // storage by construction, not ContextCleaner timing
-      val lc = new LineageCut(checkpointDir)
+      requireExhausted: Boolean = false): DataFrame =
+    Fixpoint.run(edges.sparkSession, "bfs", checkpointDir, maxHops,
+        capIsConvergence = false) { lc =>
       // pre-partitioned on the per-round join key (the g01 hoist): each
       // round's frontier⋈e join reshuffles only the frontier
       val e = lc.pin(edges.select(col("u"), col("v")).repartition(col("u")))
-      var dist = lc(sources.select(col("node"), lit(0L).as("hop")).distinct())
-      var h = 1
-      var exhausted = false
-      while (h <= maxHops && !exhausted) {
+      Fixpoint.loop(
+          lc(sources.select(col("node"), lit(0L).as("hop")).distinct())) {
+          (dist, h) =>
         val frontier = dist.filter(col("hop") === (h - 1))
         // an empty frontier can never add rows — stop instead of running
         // the remaining maxHops rounds as no-ops (matters when callers
         // pass a generous bound rather than the graph's diameter)
-        if (frontier.limit(1).count() == 0L) exhausted = true
+        if (frontier.limit(1).count() == 0L) (dist, true)
         else {
           val next = frontier.join(e, frontier("node") === e("u"))
             .select(e("v").as("node"), lit(h.toLong).as("hop"))
-          dist = lc(dist.union(next)
-            .groupBy("node").agg(min("hop").as("hop")))
+          (lc(dist.union(next).groupBy("node").agg(min("hop").as("hop"))),
+            false)
         }
-        h += 1
+      } { (dist, exhausted) =>
+        // truncation guard (round 14, r13 advice): when the loop ended
+        // on the round CAP rather than an empty frontier, the reachable
+        // set may be incomplete — nothing in the result distinguishes
+        // "done" from "stopped early". Callers that need full closure
+        // opt in and get an exact check: expand the final frontier once
+        // more and look for any node not already reached. Frontier-
+        // sized work, only on the cap-hit path.
+        if (requireExhausted && !exhausted) {
+          val lastFrontier = dist.filter(col("hop") === maxHops.toLong)
+          val unvisited = lastFrontier
+            .join(e, lastFrontier("node") === e("u"))
+            .select(e("v").as("node"))
+            .join(dist, Seq("node"), "left_anti")
+            .limit(1).count()
+          require(unvisited == 0L,
+            s"Bfs.hops(requireExhausted=true) hit the $maxHops-round cap " +
+              "with unvisited neighbors remaining — the reachable set is " +
+              "TRUNCATED. Raise maxHops above the graph's diameter (the " +
+              "loop stops early on an empty frontier, so a generous " +
+              "bound costs nothing).")
+        }
+        dist
       }
-      // truncation guard (round 14, r13 advice): when the loop ended on
-      // the round CAP rather than an empty frontier, the reachable set
-      // may be incomplete — nothing in the result distinguishes "done"
-      // from "stopped early". Callers that need full closure opt in and
-      // get an exact check: expand the final frontier once more and
-      // look for any node not already reached. Frontier-sized work,
-      // only on the cap-hit path.
-      if (requireExhausted && !exhausted) {
-        val lastFrontier = dist.filter(col("hop") === maxHops.toLong)
-        val unvisited = lastFrontier
-          .join(e, lastFrontier("node") === e("u"))
-          .select(e("v").as("node"))
-          .join(dist, Seq("node"), "left_anti")
-          .limit(1).count()
-        require(unvisited == 0L,
-          s"Bfs.hops(requireExhausted=true) hit the $maxHops-round cap " +
-            "with unvisited neighbors remaining — the reachable set is " +
-            "TRUNCATED. Raise maxHops above the graph's diameter (the " +
-            "loop stops early on an empty frontier, so a generous bound " +
-            "costs nothing).")
-      }
-      dist
     }
-  }
 }

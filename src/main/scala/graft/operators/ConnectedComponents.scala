@@ -20,20 +20,8 @@ import org.apache.spark.storage.StorageLevel
   * with long chains, swap in star-contraction; the API contract
   * (edges → (node, component=min id)) stays the same.
   *
-  * Each iteration's labels are eagerly checkpointed: without the
-  * lineage cut, every round's logical plan embeds the previous round's
-  * twice (join + union), so analysis/optimization cost grows
-  * exponentially with round count even when the data itself is cached.
-  * Two cut flavors, chosen by `checkpointDir`:
-  *   - None (default): `localCheckpoint` — executor-stored blocks, no
-  *     extra I/O; right for restartable batch jobs, but blocks PIN the
-  *     executors that hold them, and executor loss mid-iteration kills
-  *     the job. Fine on local[n]; fragile on a 1000-executor cluster
-  *     with preemption.
-  *   - Some(dir): reliable `checkpoint` to that directory (HDFS/object
-  *     store) — rounds survive executor loss and release executor
-  *     memory; costs one write+read of the label table per round. The
-  *     production default at 100 TB.
+  * Rounds run on [[Fixpoint]]: each round's labels are eagerly cut
+  * (constant-size plans), `checkpointDir` picks local or reliable cuts.
   */
 object ConnectedComponents {
 
@@ -71,14 +59,9 @@ object ConnectedComponents {
   def minLabel(edges: DataFrame, maxIterations: Int = 50,
       checkpointDir: Option[String] = None,
       initialLabels: Option[DataFrame] = None,
-      roundOffset: Int = 0): DataFrame = {
-    // core-tied round layout (see [[RoundLayout]]): node-sized
-    // per-round state must not inherit a corpus-derived session
-    // partition count -- measured at sf10 in GROWTH_r10
-    RoundLayout.coreTied(edges.sparkSession) {
-      // rotated per-round cuts: a superseded label table's blocks are
-      // unpersisted once 2 newer cuts exist (see [[LineageCut]])
-      val lc = new LineageCut(checkpointDir)
+      roundOffset: Int = 0): DataFrame =
+    Fixpoint.run(edges.sparkSession, "cc", checkpointDir, maxIterations,
+        capIsConvergence = true, roundOffset = roundOffset) { lc =>
       val e = edges.toDF("a", "b")
       // pre-partitioned on the per-round join key (the g01 hoist): the
       // persisted blocks keep their partitioning, so each round's
@@ -89,25 +72,23 @@ object ConnectedComponents {
         .distinct()
         .repartition(col("a"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      // eager checkpoint: materializes AND truncates lineage to a
-      // LogicalRDD — constant-size plans per round (see scaladoc).
       // Resume surface: a caller-provided state replaces the self-label
       // init — cut once (pin) so the first round's join doesn't
       // re-evaluate an arbitrary caller plan (e.g. a checkpoint-
       // recovery scan), PageRank's resumeInit discipline.
-      var labels = initialLabels match {
-        case Some(init) => lc.pin(init.select(col("node"), col("label")))
+      val init = initialLabels match {
+        case Some(state) => lc.pin(state.select(col("node"), col("label")))
         case None => lc(sym.select(col("a").as("node")).distinct()
           .withColumn("label", col("node")))
       }
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIterations) {
+      Fixpoint.loop(init) { (labels, _) =>
         // change detection rides the SAME aggregate: each node's own label
         // travels in the union flagged `own`, the agg keeps min(all) and
         // the own label, and "any node improved" is a cheap filter over
         // the already-checkpointed result — one join + one agg per round,
-        // not join + agg + a second labels⋈next join just to diff.
+        // not join + agg + a second labels⋈next join just to diff. The
+        // cut holds (node, label, prev) — the announced round file; a
+        // resume reloads it and passes (node, label) as initialLabels.
         val msgs = sym
           .join(labels, sym("a") === labels("node"))
           .select(sym("b").as("node"), labels("label"), lit(0L).as("own"))
@@ -115,19 +96,12 @@ object ConnectedComponents {
         val next = lc(msgs.groupBy("node")
           .agg(min("label").as("label"),
             max(when(col("own") === 1L, col("label"))).as("prev")))
-        // reliable-mode observability (round 14, the CC preemption
-        // drill's hook — see LineageCut.announceRound): the announced
-        // file holds (node, label, prev); a resume reloads it and
-        // passes (node, label) as initialLabels
-        LineageCut.announceRound(next, "cc", roundOffset + i + 1)
         val changed = next.filter(col("label") < col("prev"))
           .limit(1).count()
-        labels = next.select("node", "label")
-        converged = changed == 0L
-        i += 1
+        (next.select("node", "label"), changed == 0L)
+      } { (labels, _) =>
+        sym.unpersist()
+        labels.select(col("node"), col("label").as("component"))
       }
-      sym.unpersist()
-      labels.select(col("node"), col("label").as("component"))
     }
-  }
 }

@@ -56,15 +56,14 @@ import org.apache.spark.sql.functions._
   * The broadcast state is node-sized, so past `broadcastScoreMax`
   * nodes (default 32M ≈ 1-2 GB of broadcast relation, [[PageRank]]'s
   * `broadcastRankMax` doctrine) the loop falls back to the r13
-  * shuffle shape: edge⋈score sort-merge joins against one or two
-  * pre-partitioned edge pins (`dualEdgePin` picks — two pins mean no
-  * round ever reshuffles edges, break-even ≈ 4-5 rounds, GROWTH_r10).
-  * Results are IDENTICAL across all three layouts (same joins, same
-  * arithmetic) — spec-pinned bit-identical in HitsSpec.
+  * shuffle shape: edge⋈score sort-merge joins against ONE u-keyed
+  * edge pin, which the h-half-round's join reshuffles onto `v` (a
+  * second, v-keyed pin measured slower at sf10 over 2 rounds: 255 s
+  * against 211 s, GROWTH_r10). The fallback does not cut raw sums.
+  * Results are IDENTICAL across layouts (same joins, same arithmetic)
+  * — spec-pinned bit-identical in HitsSpec.
   *
-  * Score state is checkpointed per half-round (constant-size plans).
-  * Lineage cuts follow the [[ConnectedComponents]] contract via
-  * `checkpointDir`.
+  * Rounds run on [[Fixpoint]]; score state is cut per half-round.
   */
 object Hits {
 
@@ -77,73 +76,43 @@ object Hits {
     *              deltas per round; 16 bytes of driver metadata).
     *              Spec-pinned: tol=0 ≡ fixed rounds, tol runs return
     *              their stopping round's fixed-round state exactly.
-    * @param dualEdgePin FALLBACK-mode layout knob (shuffle shape only;
-    *              broadcast mode always uses one pin). true =
-    *              checkpoint TWO pre-partitioned edge copies, one per
-    *              alternating join key, so no round ever reshuffles
-    *              the edge list. false = pin only the u-keyed copy and
-    *              let each h-round's join reshuffle it on `v` — halves
-    *              setup materialization at the price of one edge-sized
-    *              shuffle per round. GROWTH_r10 measured both arms at
-    *              sf10 (58.7M edges, 2 rounds, min-of-3): single
-    *              211.1 s vs dual 255.1 s — break-even ≈ 4-5 rounds.
-    *              Results IDENTICAL either way (spec-pinned).
     * @param pinKey "u" (default) or "v": the edge pin's partitioning
     *              key in broadcast mode. Pick the side with MORE
-    *              distinct nodes (scaladoc above). Fallback mode
-    *              ignores it (its pins are keyed by join side).
+    *              distinct nodes (scaladoc above). The fallback
+    *              reads a u-keyed pin either way.
     * @param broadcastScoreMax node-count ceiling for the zero-edge-
     *              shuffle broadcast round shape; past it the loop uses
     *              the r13 shuffle shape. 0 forces the fallback (the
     *              spec's equivalence knob).
-    * @param cutRawSums broadcast-mode layout knob (round 16, the r14
-    *              "accepted trade" made measurable both ways): true
-    *              (default) = lineage-cut each half-round's raw sum so
-    *              normalize's max subquery and outer join read blocks
-    *              — two node-sized cut writes per round, edge pin
-    *              scanned once per half-round. false = hand normalize
-    *              the uncut sum; the max subquery and the join each
-    *              re-evaluate the broadcast-join+partial-agg over the
-    *              edge pin (2 pin scans per half-round, zero cut
-    *              writes) — the small-graph mode SCALE.md named, where
-    *              the ~constant cut cost dominates a ~3 s query.
-    *              Results IDENTICAL either way (deterministic sum;
-    *              spec-pinned). Fallback mode ignores it (its sums are
-    *              edge-sized SMJs — never re-evaluate those twice).
     * @return columns `node`, `hub_e6`, `auth_e6` for every node
     *         appearing in the edge list (either side) */
   def scores(edges: DataFrame, iterations: Int,
       checkpointDir: Option[String] = None,
       tol: Long = 0L,
-      dualEdgePin: Boolean = true,
       pinKey: String = "u",
-      broadcastScoreMax: Long = 32000000L,
-      cutRawSums: Boolean = true): DataFrame = {
-    // core-tied round layout (see [[RoundLayout]]): node-sized
-    // per-round state must not inherit a corpus-derived session
-    // partition count -- measured at sf10 in GROWTH_r10
-    RoundLayout.coreTied(edges.sparkSession) {
+      broadcastScoreMax: Long = 32000000L): DataFrame =
+    // score STATES rotate through the r13 window — h/a interleave
+    // through one keep=2 FIFO (a(n-1) is released when a(n) cuts, by
+    // which point h(n-1..n) were already materialized from it);
+    // tolerance mode keeps THREE generations because the Δa delta reads
+    // a(n-1) AFTER a(n) cuts
+    Fixpoint.run(edges.sparkSession, "hits", checkpointDir, iterations,
+        capIsConvergence = tol > 0L, keep = if (tol > 0L) 3 else 2) { lc =>
       require(tol >= 0L, s"tol must be ≥ 0 (got $tol)")
       require(pinKey == "u" || pinKey == "v",
         s"pinKey must be 'u' or 'v' (got '$pinKey')")
-      // TWO rotations (see [[LineageCut]]): score STATES rotate through
-      // the r13 window — h/a interleave through one keep=2 FIFO (a(n-1)
-      // is released when a(n) cuts, by which point h(n-1..n) were
-      // already materialized from it); tolerance mode keeps THREE
-      // generations because the Δa delta reads a(n-1) AFTER a(n) cuts.
-      // Broadcast mode's RAW SUMS get their own keep=1 rotation: a sum
+      // broadcast mode's RAW SUMS get their own keep=1 rotation: a sum
       // is dead the moment its normalized state materializes, and
       // mixing the two lifetimes in one FIFO would either release the
       // final a-state before the output join reads it (keep=2) or hold
       // edge-adjacent generations longer than needed (keep=5)
-      val lc = new LineageCut(checkpointDir,
-        keep = if (tol > 0L) 3 else 2)
       val lcSum = new LineageCut(checkpointDir, keep = 1)
       val e = edges.select(col("u"), col("v"))
       // the ONE edge pin, pre-partitioned on pinKey; the caller's edge
-      // plan is evaluated exactly once, into this cut. Fallback mode
-      // derives its own key-specific pins FROM it (checkpoint-to-
-      // checkpoint repartitions, never a second caller-plan run).
+      // plan is evaluated exactly once, into this cut. The fallback
+      // derives its u-keyed pin FROM it when pinKey = "v" (a
+      // checkpoint-to-checkpoint repartition, never a second caller-
+      // plan run).
       val pinned = lc.pin(e.repartition(col(pinKey)))
       // node set and total degree (in+out, bag union) come from ONE
       // grouped aggregate over the checkpointed copy — the count rides
@@ -171,8 +140,13 @@ object Hits {
           s"(found a node with total degree $maxDeg); drop the score scale " +
           "to 1e3 or renormalize in two steps — see scaladoc")
       val bcast = nNodes <= broadcastScoreMax
-      var h = nodes.withColumn("h", lit(1000000L))
-      var a = nodes.withColumn("a", lit(1000000L))
+      // the edges both half-rounds read: broadcast mode streams the one
+      // pinKey pin; the shuffle fallback (node count above
+      // broadcastScoreMax) joins against the u-keyed pin and lets the
+      // h-half-round's SMJ reshuffle it onto v
+      val ed =
+        if (bcast || pinKey == "u") pinned
+        else lc.pin(pinned.repartition(col("u")))
       // one-row max|Δ| between two adjacent score states (tol mode only)
       def delta(cur: DataFrame, prev: DataFrame, c: String): Long =
         cur.select(col("node"), col(c))
@@ -183,25 +157,28 @@ object Hits {
       // OTHER side. Broadcast mode: BHJ of the node-sized state into
       // the pin (partitioning-preserving, zero edge shuffle; the
       // groupBy either reuses the pin's partitioning outright or moves
-      // map-side-combined partials). Fallback: the r13 edge⋈score SMJ.
-      def sumInto(ed: DataFrame, state: DataFrame, stateCol: String,
+      // map-side-combined partials), cut so normalize reads blocks.
+      // Fallback: the r13 edge⋈score SMJ, uncut.
+      def sumInto(state: DataFrame, stateCol: String,
           joinKey: String, groupKey: String): DataFrame = {
         val s = state.select(col("node").as(joinKey), col(stateCol))
         val joined =
           if (bcast) ed.join(broadcast(s), joinKey)
           else ed.join(s, joinKey)
-        joined.groupBy(col(groupKey))
+        val raw = joined.groupBy(col(groupKey))
           .agg(sum(stateCol).as("s"))
           .select(col(groupKey).as("node"), col("s"))
+        if (bcast) lcSum(raw) else raw
       }
       // normalize a raw sum to (1e6 · s) div max(s) over the full node
       // set (nodes absent from the sum score 0). The one-row max
       // subquery and the outer join each evaluate `raw` once — in
-      // broadcast mode the caller hands in a node-sized lineage CUT,
-      // so both reads hit checkpointed blocks and the edge scan stays
-      // at once per half-round (the r13 shape evaluated the edge-sized
-      // SMJ sum twice here); the fallback keeps r13's double
-      // evaluation, its cost model unchanged.
+      // broadcast mode that is a node-sized lineage CUT, so both reads
+      // hit checkpointed blocks and the edge scan stays at once per
+      // half-round (the r13 shape evaluated the edge-sized SMJ sum
+      // twice here); the fallback keeps r13's double evaluation, its
+      // cost model unchanged (cutting only a was measured SLOWER at
+      // sf0.1, warm min 5.9 s vs 3.8 s).
       def normalize(raw: DataFrame, outCol: String): DataFrame = {
         val m = raw.agg(max("s").as("m"))
         lc(nodes
@@ -211,55 +188,18 @@ object Hits {
             expr("CAST((1000000 * coalesce(s, 0L)) div m AS BIGINT)")
               .as(outCol)))
       }
-      if (bcast) {
-        var i = 0
-        var converged = false
-        while (i < iterations && !converged) {
-          val (hPrev, aPrev) = (h, a)
-          def maybeCut(raw: DataFrame): DataFrame =
-            if (cutRawSums) lcSum(raw) else raw
-          val asum = maybeCut(sumInto(pinned, h, "h", "u", "v"))
-          a = normalize(asum, "a")
-          // Δa must read a(n-1) HERE, before the h-half-round's cut
-          // rotates it out of the keep=3 window
-          val dA = if (tol > 0L) delta(a, aPrev, "a") else Long.MaxValue
-          val hsum = maybeCut(sumInto(pinned, a, "a", "v", "u"))
-          h = normalize(hsum, "h")
-          if (tol > 0L)
-            converged = dA <= tol && delta(h, hPrev, "h") <= tol
-          i += 1
-        }
-      } else {
-        // ── r13 shuffle fallback (node count above broadcastScoreMax):
-        // edge⋈score SMJs against per-key edge pins; both derived from
-        // `pinned`, so repartitions read checkpointed blocks
-        val eByU = if (pinKey == "u") pinned
-          else lc.pin(pinned.repartition(col("u")))
-        val eByV =
-          if (dualEdgePin)
-            (if (pinKey == "v") pinned
-             else lc.pin(eByU.repartition(col("v"))))
-          else eByU
-        var i = 0
-        var converged = false
-        while (i < iterations && !converged) {
-          val (hPrev, aPrev) = (h, a)
-          // both a and h are cut per round: skipping a's cut was
-          // measured SLOWER (sf0.1, warm min 5.9 s vs 3.8 s) because
-          // the max broadcast subquery and the normalize join then each
-          // re-evaluate the edge-sized sum aggregate
-          val asum = sumInto(eByU, h, "h", "u", "v")
-          a = normalize(asum, "a")
-          val dA = if (tol > 0L) delta(a, aPrev, "a") else Long.MaxValue
-          val hsum = sumInto(eByV, a, "a", "v", "u")
-          h = normalize(hsum, "h")
-          if (tol > 0L)
-            converged = dA <= tol && delta(h, hPrev, "h") <= tol
-          i += 1
-        }
+      Fixpoint.loop((nodes.withColumn("h", lit(1000000L)),
+          nodes.withColumn("a", lit(1000000L)))) { case ((h, a), _) =>
+        val aNext = normalize(sumInto(h, "h", "u", "v"), "a")
+        // Δa must read a(n-1) HERE, before the h-half-round's cut
+        // rotates it out of the keep=3 window
+        val dA = if (tol > 0L) delta(aNext, a, "a") else Long.MaxValue
+        val hNext = normalize(sumInto(aNext, "a", "v", "u"), "h")
+        ((hNext, aNext),
+          tol > 0L && dA <= tol && delta(hNext, h, "h") <= tol)
+      } { case ((h, a), _) =>
+        h.join(a, "node")
+          .select(col("node"), col("h").as("hub_e6"), col("a").as("auth_e6"))
       }
-      h.join(a, "node")
-        .select(col("node"), col("h").as("hub_e6"), col("a").as("auth_e6"))
     }
-  }
 }

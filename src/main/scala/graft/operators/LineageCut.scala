@@ -5,15 +5,16 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Per-round lineage cut with BOUNDED storage for the iterative
-  * operators (PageRank, Bfs, Sssp, Hits, KCore, LabelPropagation,
-  * ConnectedComponents).
+  * operators: the main rotation of every [[Fixpoint]] engine
+  * (ConnectedComponents, LabelPropagation, KCore, Bfs, Sssp, PageRank,
+  * Hits), plus KCore's drop-set and Hits' raw-sum rotations.
   *
-  * Every loop eagerly checkpoints its per-round state so plans stay
-  * constant-size (the [[ConnectedComponents]] contract). Before this
-  * helper, each superseded round's `localCheckpoint` blocks were left
-  * to the ContextCleaner — correct, but block eviction then depends on
-  * driver GC timing, so a 100-iteration production run could hold many
-  * node-sized states at once. This helper makes the bound structural:
+  * Every round's state is cut eagerly so plans stay constant-size (see
+  * [[Fixpoint]]). Before this helper, each superseded round's
+  * `localCheckpoint` blocks were left to the ContextCleaner — correct,
+  * but block eviction then depends on driver GC timing, so a
+  * 100-iteration production run could hold many node-sized states at
+  * once. This helper makes the bound structural:
   * it keeps a FIFO of the live cuts and explicitly unpersists a cut's
   * blocks as soon as it falls `keep` generations behind — at which
   * point every later state has already been materialized FROM it
@@ -52,42 +53,21 @@ import org.apache.spark.sql.execution.LogicalRDD
 object LineageCut {
   private val envOverrideLogged =
     new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  /** Reliable-mode observability (round 13 PageRank, shared round 14):
-    * announce a just-cut round state's checkpoint FILE on stderr so an
-    * external supervisor can resume from the last completed round
-    * after a driver loss. Metadata-sized (one line per round); silent
-    * in localCheckpoint mode (getCheckpointFile is Some only for
-    * reliable checkpoints). The line format is the contract
-    * tools/drill_preempt.py greps: `[<tag>] round <n> complete: <file>`.
-    *
-    * SUPERVISOR CONTRACT (round 16, the r15 advice): announced round
-    * numbers are globally monotonic across kills — every resume
-    * surface ([[PageRank.ranks]], [[ConnectedComponents.minLabel]])
-    * takes a `roundOffset` that the resume leg sets to the prior
-    * run's completed-round count, so a resumed run announces
-    * (offset+1, offset+2, ...), and a supervisor surviving a SECOND
-    * kill reads total progress straight off the latest announcement.
-    * A caller that resumes WITHOUT passing the offset degrades to the
-    * round-15 contract (local numbering; the supervisor must sum
-    * per-run counts itself). The state FILE is self-contained either
-    * way (it holds the full node-sized state, not a delta), so
-    * resuming from the latest announced file is always correct. */
-  def announceRound(df: DataFrame, tag: String, round: Int): Unit =
-    df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
-      .flatMap(_.getCheckpointFile).foreach { f =>
-        System.err.println(s"[$tag] round $round complete: $f")
-      }
 }
 
-final class LineageCut(checkpointDirOpt: Option[String], keep: Int = 2) {
+// `onCut` sees every rotation cut once it has materialized — the
+// [[Fixpoint]] driver's round-announcement hook
+final class LineageCut private[operators] (checkpointDirOpt: Option[String],
+    keep: Int, onCut: RDD[_] => Unit) {
   require(keep >= 1, "LineageCut must keep at least one generation")
+
+  def this(checkpointDirOpt: Option[String], keep: Int = 2) =
+    this(checkpointDirOpt, keep, _ => ())
   private val live = scala.collection.mutable.Queue.empty[RDD[_]]
 
-  // MEASUREMENT-ONLY escape (round 12, like RoundLayout's
-  // SPARK_GRAFT_NO_CORE_TIED): SPARK_GRAFT_CHECKPOINT_DIR flips every
-  // engine in a run to reliable-checkpoint mode without threading a
-  // parameter through 9 query builders — the knob the sf10
+  // MEASUREMENT-ONLY escape (round 12): SPARK_GRAFT_CHECKPOINT_DIR
+  // flips every engine in a run to reliable-checkpoint mode without
+  // threading a parameter through 9 query builders — the knob the sf10
   // reliable-checkpoint-tax arms need. Production callers pass
   // checkpointDir explicitly; an explicit Some always wins.
   private val checkpointDir: Option[String] =
@@ -168,6 +148,7 @@ final class LineageCut(checkpointDirOpt: Option[String], keep: Int = 2) {
         graft.Caches.track(rdd)
         live.enqueue(rdd)
         while (live.size > keep) release(live.dequeue())
+        onCut(rdd)
       }
     out
   }

@@ -85,15 +85,10 @@ import org.apache.spark.sql.functions._
   * edge plan must cut it themselves before calling (localCheckpoint /
   * [[LineageCut.pin]]), exactly as GraphPack does.
   *
-  * Each round's rank state (one row per node) is eagerly checkpointed
-  * so the plan stays constant-size across iterations. Lineage cuts
-  * follow the
-  * [[ConnectedComponents]] contract: `checkpointDir = None` uses
-  * `localCheckpoint` (no extra I/O, but blocks pin executors and die
-  * with them — fine on local[n]); `Some(dir)` uses reliable
-  * `checkpoint` into that directory (survives executor loss — the
-  * production default at 100 TB, and PageRank is the operator most
-  * likely to run long enough to see one die).
+  * Rounds run on [[Fixpoint]]: each round's rank state (one row per
+  * node) is eagerly cut. Reliable cuts (`checkpointDir = Some(dir)`)
+  * matter most here — PageRank is the operator most likely to run
+  * long enough to see an executor die.
   */
 object PageRank {
 
@@ -168,7 +163,7 @@ object PageRank {
     * @param roundOffset   rounds completed BEFORE this run (round 16,
     *                      the r15 advice): a resume leg passes the
     *                      prior run's completed-round count so
-    *                      [[LineageCut.announceRound]] numbers stay
+    *                      [[Fixpoint]]'s round announcements stay
     *                      globally monotonic across kills — the
     *                      supervisor reads progress straight off the
     *                      announcements instead of accumulating
@@ -183,20 +178,13 @@ object PageRank {
       initialRanks: Option[DataFrame] = None,
       broadcastRankMax: Long = 32000000L,
       trustSymmetry: Boolean = false,
-      roundOffset: Int = 0): DataFrame = {
-    // core-tied round layout (see [[RoundLayout]]): node-sized
-    // per-round state must not inherit a corpus-derived session
-    // partition count -- measured at sf10 in GROWTH_r10
-    RoundLayout.coreTied(edges.sparkSession) {
+      roundOffset: Int = 0): DataFrame =
+    Fixpoint.run(edges.sparkSession, "pagerank", checkpointDir, iterations,
+        capIsConvergence = tol > 0L, roundOffset = roundOffset) { lc =>
       require(teleportTo.isEmpty || !redistributeDangling,
         "teleportTo is only supported under the symmetric contract " +
           "(redistributeDangling=false)")
       require(tol >= 0L, s"tol must be ≥ 0 (got $tol)")
-      // per-round cuts rotate through LineageCut so superseded rounds'
-      // blocks are unpersisted BY CONSTRUCTION (≤2 rank states live at
-      // any time), not left to ContextCleaner GC timing; setup relations
-      // are pinned for the whole run
-      val lc = new LineageCut(checkpointDir)
       // NOT pinned (input contract above): production callers pass
       // memoized block scans, and an edge-sized pin here was half the
       // measured sf10 setup wall
@@ -246,151 +234,126 @@ object PageRank {
             .agg(expr("CAST(sum(r div d) AS BIGINT)").as("inflow"))
             .select(col("v").as("node"), col("inflow"))
 
-      // shared round driver for all three modes: fixed-count when tol=0
-      // (the pre-tol behavior, bit-identical), early-stop on
-      // max|Δr| ≤ tol otherwise. prev and r are adjacent LineageCut
-      // generations (keep=2), so prev's blocks are still live when the
-      // delta reads them.
-      def loop(init: DataFrame)(step: DataFrame => DataFrame): DataFrame = {
-        var r = init
-        var i = 0
-        var converged = false
-        while (i < iterations && !converged) {
-          val prev = r
-          r = step(prev)
-          // reliable-mode observability (round 13, the preemption
-          // drill's hook; shared helper since round 14). roundOffset
-          // keeps announced numbers globally monotonic across resumes
-          // (round 16, the r15 advice): a resume leg passes the rounds
-          // already completed before the kill, so a supervisor reads
-          // global progress off the announcement itself instead of
-          // re-deriving it by summing per-run counts.
-          LineageCut.announceRound(r, "pagerank", roundOffset + i + 1)
-          if (tol > 0L) {
-            val delta = r.select(col("node"), col("r"))
-              .join(prev.select(col("node"), col("r").as("r_prev")), "node")
-              .agg(coalesce(max(abs(col("r") - col("r_prev"))), lit(0L))
-                .as("d"))
-              .head.getLong(0)
-            converged = delta <= tol
-          }
-          i += 1
-        }
-        r
-      }
       // resume surface: a caller-provided starting state replaces the
       // uniform init — cut once so the first round's two reads (dsum +
       // inflow in the redistribute mode) don't re-evaluate an arbitrary
       // caller plan (e.g. a checkpoint-recovery scan)
       val resumeInit: Option[DataFrame] =
         initialRanks.map(df => lc.pin(df.select(col("node"), col("r"))))
-  
-      if (!redistributeDangling) {
-        // THE one edge-sized shuffle+write of the run (round 14): a
-        // narrow (u, v) pin pre-partitioned on the SOURCE key. The
-        // caller's plan is evaluated exactly once, into this cut;
-        // everything below derives from checkpointed blocks.
-        val eByU = lc.pin(e.repartition(col("u")))
-        // ZERO-shuffle degree table: the groupBy reuses the pin's
-        // hash(u) partitioning, so no map-side partials ever move (at
-        // sf30 the r13 partial-combine over a hash-scattered 352M-row
-        // list shuffled near-edge-sized — the superlinear-setup term)
-        val degP = lc.pin(eByU.groupBy("u").agg(count(lit(1)).as("d")))
-        // node set = sources (symmetric contract) — one setup count
-        // decides broadcast vs shuffle shape for the whole run
-        val bcast = degP.count() <= broadcastRankMax
-        // loud guard for the documented contract (scaladoc above): a
-        // destination with no out-edges would silently absorb rank.
-        // Anti HASH join of pinned destinations against the (broadcast)
-        // degree pin — no distinct shuffle, limit(1) short-circuits
-        val degKeys = degP.select(col("u"))
-        val dangling = eByU.select(col("v").as("u"))
-          .join(if (bcast) broadcast(degKeys) else degKeys,
-            Seq("u"), "left_anti").limit(1).count()
-        require(dangling == 0L,
-          "PageRank(redistributeDangling=false) requires a symmetrized edge " +
-            "list (every destination must also be a source); found dangling " +
-            "destinations — symmetrize the input or pass redistributeDangling=true")
-        // destination-partitioned copy for the broadcast round shape:
-        // under the symmetric contract it is a FREE column-swap
-        // projection of the source pin (reversed(E) = E as a row set;
-        // hash(u) maps through the swap to partitioned-by-`v`) — no
-        // second edge shuffle, no second write. trustSymmetry=false
-        // restores the r13 independent repartition for callers whose
-        // input is dangling-free but not literally symmetric. The
-        // shuffle fallback joins the degree in: both sides are already
-        // hash(u)-partitioned, so the pin is a write-only cut.
-        val ed =
-          if (bcast) {
-            if (trustSymmetry)
-              eByU.select(col("v").as("u"), col("u").as("v"))
-            else lc.pin(eByU.repartition(col("v")))
-          } else lc.pin(eByU.join(degP, "u"))
-        val init = resumeInit.getOrElse(
-          degP.select(col("u").as("node"), lit(1000000L).as("r")))
-        teleportTo match {
-          case None =>
-            // symmetric contract ⇒ every node has in-edges, so the
-            // inflow relation covers the whole node set and the damped
-            // update is a straight projection of it
-            loop(init) { prev =>
-              lc(inflowOf(ed, degP, prev, bcast)
-                .select(col("node"),
-                  expr("CAST(150000 + (85 * inflow) div 100 AS BIGINT)")
-                    .as("r")))
-            }
-          case Some(t) =>
-            // nodes with zero inflow still carry their seed base, so the
-            // update is anchored on the node set (= sources, symmetric
-            // contract), not on the destinations that happened to receive
-            val nodes = degP.select(col("u").as("node"))
-            val seeds = lc.pin(t.select(col("node")).distinct()
-              .withColumn("is_seed", lit(1)))
-            loop(init) { prev =>
-              val inflow = inflowOf(ed, degP, prev, bcast)
-              lc(nodes
-                .join(inflow, Seq("node"), "left_outer")
-                .join(seeds, Seq("node"), "left_outer")
-                .select(col("node"),
-                  expr("CAST((CASE WHEN is_seed = 1 THEN 150000 ELSE 0 END)" +
-                    " + (85 * coalesce(inflow, 0L)) div 100 AS BIGINT)")
-                    .as("r")))
-            }
+      // each mode's setup yields the round-1 state and the damped update
+      val (init, update): (DataFrame, DataFrame => DataFrame) =
+        if (!redistributeDangling) {
+          // THE one edge-sized shuffle+write of the run (round 14): a
+          // narrow (u, v) pin pre-partitioned on the SOURCE key. The
+          // caller's plan is evaluated exactly once, into this cut;
+          // everything below derives from checkpointed blocks.
+          val eByU = lc.pin(e.repartition(col("u")))
+          // ZERO-shuffle degree table: the groupBy reuses the pin's
+          // hash(u) partitioning, so no map-side partials ever move (at
+          // sf30 the r13 partial-combine over a hash-scattered 352M-row
+          // list shuffled near-edge-sized — the superlinear-setup term)
+          val degP = lc.pin(eByU.groupBy("u").agg(count(lit(1)).as("d")))
+          // node set = sources (symmetric contract) — one setup count
+          // decides broadcast vs shuffle shape for the whole run
+          val bcast = degP.count() <= broadcastRankMax
+          // loud guard for the documented contract (scaladoc above): a
+          // destination with no out-edges would silently absorb rank.
+          // Anti HASH join of pinned destinations against the (broadcast)
+          // degree pin — no distinct shuffle, limit(1) short-circuits
+          val degKeys = degP.select(col("u"))
+          val dangling = eByU.select(col("v").as("u"))
+            .join(if (bcast) broadcast(degKeys) else degKeys,
+              Seq("u"), "left_anti").limit(1).count()
+          require(dangling == 0L,
+            "PageRank(redistributeDangling=false) requires a symmetrized edge " +
+              "list (every destination must also be a source); found dangling " +
+              "destinations — symmetrize the input or pass redistributeDangling=true")
+          // destination-partitioned copy for the broadcast round shape:
+          // under the symmetric contract it is a FREE column-swap
+          // projection of the source pin (reversed(E) = E as a row set;
+          // hash(u) maps through the swap to partitioned-by-`v`) — no
+          // second edge shuffle, no second write. trustSymmetry=false
+          // restores the r13 independent repartition for callers whose
+          // input is dangling-free but not literally symmetric. The
+          // shuffle fallback joins the degree in: both sides are already
+          // hash(u)-partitioned, so the pin is a write-only cut.
+          val ed =
+            if (bcast) {
+              if (trustSymmetry)
+                eByU.select(col("v").as("u"), col("u").as("v"))
+              else lc.pin(eByU.repartition(col("v")))
+            } else lc.pin(eByU.join(degP, "u"))
+          val init = resumeInit.getOrElse(
+            degP.select(col("u").as("node"), lit(1000000L).as("r")))
+          teleportTo match {
+            case None =>
+              // symmetric contract ⇒ every node has in-edges, so the
+              // inflow relation covers the whole node set and the damped
+              // update is a straight projection of it
+              (init, prev =>
+                lc(inflowOf(ed, degP, prev, bcast)
+                  .select(col("node"),
+                    expr("CAST(150000 + (85 * inflow) div 100 AS BIGINT)")
+                      .as("r"))))
+            case Some(t) =>
+              // nodes with zero inflow still carry their seed base, so the
+              // update is anchored on the node set (= sources, symmetric
+              // contract), not on the destinations that happened to receive
+              val nodes = degP.select(col("u").as("node"))
+              val seeds = lc.pin(t.select(col("node")).distinct()
+                .withColumn("is_seed", lit(1)))
+              (init, prev =>
+                lc(nodes
+                  .join(inflowOf(ed, degP, prev, bcast), Seq("node"),
+                    "left_outer")
+                  .join(seeds, Seq("node"), "left_outer")
+                  .select(col("node"),
+                    expr("CAST((CASE WHEN is_seed = 1 THEN 150000 ELSE 0 END)" +
+                      " + (85 * coalesce(inflow, 0L)) div 100 AS BIGINT)")
+                      .as("r"))))
+          }
+        } else {
+          // dangling-redistribute mode keeps the r13 setup: its graph is
+          // genuinely DIRECTED (no reversal identity to exploit), so the
+          // degree table aggregates the caller's plan and the edge pin is
+          // an independent repartition — by DESTINATION for the broadcast
+          // round shape, or contribution edges (u, v, d) by SOURCE for
+          // the shuffle fallback
+          val degP = lc.pin(e.groupBy("u").agg(count(lit(1)).as("d")))
+          val nodes = lc.pin(e.select(col("u").as("node"))
+            .union(e.select(col("v").as("node"))).distinct())
+          // graph cardinality is fixed across rounds — one setup count, a
+          // literal thereafter (metadata-sized, not a per-round collect)
+          val n = nodes.count()
+          val bcast = n <= broadcastRankMax
+          val ed =
+            if (bcast) lc.pin(e.repartition(col("v")))
+            else lc.pin(e.join(degP, "u").repartition(col("u")))
+          val danglingNodes = nodes.join(
+            degP.select(col("u").as("node")), Seq("node"), "left_anti")
+          (resumeInit.getOrElse(nodes.withColumn("r", lit(1000000L))), prev => {
+            // one-row dangling-mass aggregate, broadcast into every node's
+            // update via cross join — stays distributed, no driver round-trip
+            val dsum = prev.join(danglingNodes, Seq("node"), "left_semi")
+              .agg(coalesce(sum("r"), lit(0L)).as("dsum"))
+            lc(nodes
+              .join(inflowOf(ed, degP, prev, bcast), Seq("node"), "left_outer")
+              .crossJoin(broadcast(dsum))
+              .select(col("node"),
+                expr(s"CAST(150000 + (85 * (coalesce(inflow, 0L) + dsum div ${n}L))" +
+                  " div 100 AS BIGINT)").as("r")))
+          })
         }
-      } else {
-        // dangling-redistribute mode keeps the r13 setup: its graph is
-        // genuinely DIRECTED (no reversal identity to exploit), so the
-        // degree table aggregates the caller's plan and the edge pin is
-        // an independent repartition — by DESTINATION for the broadcast
-        // round shape, or contribution edges (u, v, d) by SOURCE for
-        // the shuffle fallback
-        val degP = lc.pin(e.groupBy("u").agg(count(lit(1)).as("d")))
-        val nodes = lc.pin(e.select(col("u").as("node"))
-          .union(e.select(col("v").as("node"))).distinct())
-        // graph cardinality is fixed across rounds — one setup count, a
-        // literal thereafter (metadata-sized, not a per-round collect)
-        val n = nodes.count()
-        val bcast = n <= broadcastRankMax
-        val ed =
-          if (bcast) lc.pin(e.repartition(col("v")))
-          else lc.pin(e.join(degP, "u").repartition(col("u")))
-        val danglingNodes = nodes.join(
-          degP.select(col("u").as("node")), Seq("node"), "left_anti")
-        val init = resumeInit.getOrElse(nodes.withColumn("r", lit(1000000L)))
-        loop(init) { prev =>
-          // one-row dangling-mass aggregate, broadcast into every node's
-          // update via cross join — stays distributed, no driver round-trip
-          val dsum = prev.join(danglingNodes, Seq("node"), "left_semi")
-            .agg(coalesce(sum("r"), lit(0L)).as("dsum"))
-          val inflow = inflowOf(ed, degP, prev, bcast)
-          lc(nodes
-            .join(inflow, Seq("node"), "left_outer")
-            .crossJoin(broadcast(dsum))
-            .select(col("node"),
-              expr(s"CAST(150000 + (85 * (coalesce(inflow, 0L) + dsum div ${n}L))" +
-                " div 100 AS BIGINT)").as("r")))
-        }
-      }
+      // tol = 0 runs exactly `iterations` rounds (the pre-tol behavior,
+      // bit-identical); tol > 0 stops on max|Δr| ≤ tol. prev and r are
+      // adjacent rotation generations (keep=2), so prev's blocks are
+      // still live when the delta reads them.
+      Fixpoint.loop(init) { (prev, _) =>
+        val r = update(prev)
+        (r, tol > 0L && r.select(col("node"), col("r"))
+          .join(prev.select(col("node"), col("r").as("r_prev")), "node")
+          .agg(coalesce(max(abs(col("r") - col("r_prev"))), lit(0L)).as("d"))
+          .head.getLong(0) <= tol)
+      } { (r, _) => r }
     }
-  }
 }

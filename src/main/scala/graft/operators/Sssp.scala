@@ -21,11 +21,8 @@ import org.apache.spark.sql.functions._
   * stops early once a round improves nothing (negative weights are
   * rejected; with them the fixpoint argument fails).
   *
-  * Lineage cuts follow the [[ConnectedComponents]] contract:
-  * `checkpointDir = None` → `localCheckpoint` (local[n] / restartable
-  * batch); `Some(dir)` → reliable `checkpoint` into that directory,
-  * the production default at 100 TB where a deep relaxation outlives
-  * preempted executors.
+  * Rounds run on [[Fixpoint]]; `maxRounds` bounds the path length of
+  * the answer, so hitting it prints no cap line.
   */
 object Sssp {
 
@@ -42,23 +39,20 @@ object Sssp {
     * @return columns `node`, `d` (min summed weight from any source
     *         over ≤ maxRounds edges; unreached nodes absent) */
   def distances(edges: DataFrame, sources: DataFrame, maxRounds: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
-    // core-tied round layout (see [[RoundLayout]]): node-sized
-    // per-round state must not inherit a corpus-derived session
-    // partition count -- measured at sf10 in GROWTH_r10
-    RoundLayout.coreTied(edges.sparkSession) {
-      // ROUND SHAPE (round 15 — ConnectedComponents' own-flag trick):
-      // change detection rides the SAME min-aggregate. Each node's own
-      // prior distance travels through the union flagged `own`; the
-      // aggregate keeps min(all) AND min(own), and the next frontier is
-      // a cheap FILTER over the already-checkpointed merge (d < od, or
-      // od null for a newly reached node) — the r14 shape paid a second
-      // node-sized join (merged ⋈ dist) plus a SECOND lineage cut per
-      // round just to diff adjacent states. One cut per round also
-      // drops the rotation back to keep=2 (merged(n) reads only
-      // merged(n-1), through the dist projection and the frontier
-      // filter).
-      val lc = new LineageCut(checkpointDir)
+      checkpointDir: Option[String] = None): DataFrame =
+    // ROUND SHAPE (round 15 — ConnectedComponents' own-flag trick):
+    // change detection rides the SAME min-aggregate. Each node's own
+    // prior distance travels through the union flagged `own`; the
+    // aggregate keeps min(all) AND min(own), and the next frontier is
+    // a cheap FILTER over the already-checkpointed merge (d < od, or
+    // od null for a newly reached node) — the r14 shape paid a second
+    // node-sized join (merged ⋈ dist) plus a SECOND lineage cut per
+    // round just to diff adjacent states. One cut per round also
+    // drops the rotation back to keep=2 (merged(n) reads only
+    // merged(n-1), through the dist projection and the frontier
+    // filter).
+    Fixpoint.run(edges.sparkSession, "sssp", checkpointDir, maxRounds,
+        capIsConvergence = false) { lc =>
       // pre-partitioned on the per-round join key (the g01 hoist): each
       // round's frontier⋈e join reshuffles only the frontier
       val e = lc.pin(edges.select(col("u"), col("v"), col("w"))
@@ -66,30 +60,24 @@ object Sssp {
       require(e.filter(col("w") < 0).limit(1).count() == 0L,
         "Sssp requires non-negative edge weights: with negative weights " +
           "the empty-frontier stop is not a fixpoint proof")
-      var merged = lc(sources.select(col("node"), lit(0L).as("d")).distinct()
-        .withColumn("od", lit(null).cast("long")))
-      def dist = merged.select(col("node"), col("d"))
-      def frontier = merged
-        .filter(col("od").isNull || col("d") < col("od"))
-        .select(col("node"), col("d"))
-      var r = 1
-      var exhausted = false
-      while (r <= maxRounds && !exhausted) {
+      def dist(merged: DataFrame) = merged.select(col("node"), col("d"))
+      Fixpoint.loop(lc(sources.select(col("node"), lit(0L).as("d"))
+          .distinct().withColumn("od", lit(null).cast("long")))) {
+          (merged, _) =>
+        val f = merged
+          .filter(col("od").isNull || col("d") < col("od"))
+          .select(col("node"), col("d"))
         // an empty frontier means the last round improved nothing —
         // every ≤-maxRounds-edge path minimum is already in `dist`
-        if (frontier.limit(1).count() == 0L) exhausted = true
+        if (f.limit(1).count() == 0L) (merged, true)
         else {
-          val f = frontier
           val cand = f.join(e, f("node") === e("u"))
             .select(e("v").as("node"), (f("d") + e("w")).as("d"),
               lit(0L).as("own"))
-          merged = lc(dist.withColumn("own", lit(1L)).union(cand)
+          (lc(dist(merged).withColumn("own", lit(1L)).union(cand)
             .groupBy("node").agg(min("d").as("d"),
-              min(when(col("own") === 1L, col("d"))).as("od")))
+              min(when(col("own") === 1L, col("d"))).as("od"))), false)
         }
-        r += 1
-      }
-      dist
+      } { (merged, _) => dist(merged) }
     }
-  }
 }

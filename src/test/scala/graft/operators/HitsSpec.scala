@@ -64,40 +64,26 @@ class HitsSpec extends AnyFunSuite {
       "checkpoint dir is empty — rounds did not go through the reliable path")
   }
 
-  test("all layouts bit-identical: broadcast, fallback single/dual pin") {
+  test("all layouts bit-identical: broadcast (pinKey u and v) and fallback") {
     // broadcastScoreMax=0 forces the r13 shuffle fallback (the spec's
-    // equivalence knob, PageRank's broadcastRankMax doctrine); within
-    // the fallback, dualEdgePin trades the second pre-partitioned edge
-    // pin for a per-round edge shuffle. All three are pure physical-
-    // layout choices that must never move a score. Run on the graph
-    // whose round-1 scores are asymmetric (two-hub) at two round
-    // counts, plus the pinKey="v" orientation of the broadcast pin.
+    // equivalence knob, PageRank's broadcastRankMax doctrine). Both are
+    // pure physical-layout choices that must never move a score. Run on
+    // the graph whose round-1 scores are asymmetric (two-hub) at two
+    // round counts, plus the pinKey="v" orientation of the broadcast pin.
     val g = Seq((1L, 2L), (1L, 3L), (1L, 4L), (5L, 2L))
-    def run(iters: Int, dual: Boolean, bmax: Long,
+    def run(iters: Int, bmax: Long,
         key: String = "u"): Map[Long, (Long, Long)] =
-      Hits.scores(g.toDF("u", "v"), iters, dualEdgePin = dual,
+      Hits.scores(g.toDF("u", "v"), iters,
           broadcastScoreMax = bmax, pinKey = key)
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
         .toMap
     for (iters <- Seq(1, 3)) {
       val bcastU = scores(g, iters) // default: broadcast mode, pinKey=u
-      assert(run(iters, dual = true, bmax = 0L) === bcastU,
-        s"fallback dual-pin diverged from broadcast at iterations=$iters")
-      assert(run(iters, dual = false, bmax = 0L) === bcastU,
+      assert(run(iters, bmax = 0L) === bcastU,
         s"fallback single-pin diverged from broadcast at iterations=$iters")
-      assert(run(iters, dual = true, bmax = Long.MaxValue, key = "v")
-          === bcastU,
+      assert(run(iters, bmax = Long.MaxValue, key = "v") === bcastU,
         s"broadcast pinKey=v diverged from pinKey=u at iterations=$iters")
     }
-  }
-
-  test("cutRawSums=false (uncut small-graph mode) is bit-identical") {
-    val g = Seq((1L, 2L), (1L, 3L), (1L, 4L), (5L, 2L), (4L, 5L))
-    val cut = Hits.scores(g.toDF("u", "v"), 3)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val uncut = Hits.scores(g.toDF("u", "v"), 3, cutRawSums = false)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(uncut === cut, "uncut raw-sum mode diverged from the cut default")
   }
 
   test("tol mode in the fallback layout matches broadcast-mode tol") {

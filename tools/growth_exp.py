@@ -27,7 +27,7 @@ Usage: python3 tools/growth_exp.py <round> [reps] [out.json]
 Default arms are in ARMS below; --arms overrides them (parts "def"
 = leave the knob unset, i.e. Verify's data-derived default). An
 optional trailing :KEY=VAL per arm is passed into that arm's
-environment (e.g. SPARK_GRAFT_NO_CORE_TIED=1). The artifact is merged
+environment (e.g. SPARK_GRAFT_CPUS=4). The artifact is merged
 arm-by-arm into an existing out.json so the experiment can be
 extended across runs without losing readings.
 """
@@ -43,15 +43,10 @@ REPO = Path(__file__).resolve().parent.parent
 SF10 = "/tmp/sf10"
 
 # (tag, query, shuffle_partitions_or_None_for_default[, extra_env])
-# round 11 default arms: the g01 core-tied vs session-layout A/B —
-# the one engine where the r10 doctrine measured mildly backwards
-# (213.6 def vs 225.6 ct, inside arm spread). "def" here means the
-# engines still run core-tied (production path); the NO_CORE_TIED arm
-# is the measurement-only escape in operators/RoundLayout.scala.
+# default arm: g01 under the core-tied round layout (the round-11
+# core-tied vs session-layout A/B settled the layout; GROWTH_r11)
 ARMS = [
     ("g01_ct", "g01_pagerank", None),
-    ("g01_def", "g01_pagerank", None,
-     {"SPARK_GRAFT_NO_CORE_TIED": "1"}),
 ]
 
 
